@@ -857,7 +857,7 @@ def _cc_star(edges: DataFrame, _materialize, max_iter: int) -> DataFrame:
         # the lazy large_star subtree and reuses it: nothing is
         # recomputed, and each round runs one action + one
         # materialization instead of two. Honest measurement
-        # (tools/r16_cc_ab.py, order-controlled interleaved A/B,
+        # (OPTIMIZATION_r16.md §2, order-controlled interleaved A/B,
         # labels fingerprint-identical): WARM-NEUTRAL at sf0.1
         # (loop 3.40 vs 3.44 s — localCheckpoint is near free
         # locally); the win this ships for is the checkpoint_dir

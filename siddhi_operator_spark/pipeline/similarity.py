@@ -1454,27 +1454,22 @@ def ivfpq_index_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_candidate_rows: int | None = MAX_PROBE_CANDIDATES,
-    impl: str = "wide",
 ) -> DataFrame:
     """Serve ANN from the :func:`ivfpq_index_write` layout: queries
     rank the (bounded, broadcast) centroid set for their `nprobe`
     probe cells and score ONLY those cells' code partitions via ADC —
     `cell` is the PARTITION column of the codes table, so the probe
     list becomes a file-level skip (`tests/test_plans.py` pins it).
-    Two probe implementations, bit-identical (pinned by unit test and
-    a decade A/B):
 
-    * ``impl="wide"`` (default — 2.9× the long path at the 2 M-vector
-      decade, SCALEBENCH r11): pivot each probed cell's code rows to
-      ONE row per vector, compute the ADC sum per row in codegen over
-      a fixed j order, rank directly — the m×-larger candidate join
-      and its re-aggregation never materialize. DPP cannot reach a
-      scan under an Aggregate, so the skip is STATIC: the probed cell
-      set (bounded by n_cells, the centroid-broadcast boundedness
-      class) collects once and pushes `cell IN (...)` into
-      PartitionFilters.
-    * ``impl="long"``: per-(vector, j) candidate join + groupBy sum,
-      dynamic partition pruning on the scan.
+    Probe shape (2.9× the per-(vector, j) candidate join + groupBy sum
+    it replaced, at the 2 M-vector decade, SCALEBENCH r11): pivot each
+    probed cell's code rows to ONE row per vector, compute the ADC sum
+    per row in codegen over a fixed j order, rank directly — the
+    m×-larger candidate join and its re-aggregation never
+    materialize. DPP cannot reach a scan under an Aggregate, so the
+    skip is STATIC: the probed cell set (bounded by n_cells, the
+    centroid-broadcast boundedness class) collects once and pushes
+    `cell IN (...)` into PartitionFilters.
 
     Committed exactly-once ingest batches (`codes_inc/batch=*`, see
     `streaming.similarity.ivfpq_ingest_sink`) are probed as a second
@@ -1494,11 +1489,6 @@ def ivfpq_index_topk(
     invalidates, and the query side is a LIMIT-bounded count — it
     never needs the exact n_q, only "more than the safe bound or
     not", so an arbitrary upstream query plan stops at safe+1 rows."""
-    if impl not in ("wide", "long"):
-        raise ValueError(
-            f"impl must be 'wide' or 'long', got {impl!r} — a typo'd "
-            "impl used to fall through to the long path silently"
-        )
     cent = spark.read.parquet(f"{path}/centroids").select(
         "cent_id",
         "cent_vec",
@@ -1534,12 +1524,9 @@ def ivfpq_index_topk(
     sub = dims // m
     if max_candidate_rows is not None:
         code_rows, n_cells = _probe_stats(spark, path)
-        # the wide path materializes ONE candidate row per (query,
-        # probed vector) instead of one per (query, vector, j)
-        per_query = max(
-            1,
-            nprobe * code_rows // n_cells // (m if impl == "wide" else 1),
-        )
+        # ONE candidate row per (query, probed vector), not one per
+        # (query, vector, j)
+        per_query = max(1, nprobe * code_rows // n_cells // m)
         if per_query > max_candidate_rows:
             # a SINGLE query already exceeds the cap — no chunking can
             # help (the r12 review caught the safe=max(1,...) clamp
@@ -1547,8 +1534,7 @@ def ivfpq_index_topk(
             raise ValueError(
                 f"probe would materialize ~{per_query:,} candidate "
                 f"rows PER QUERY (nprobe={nprobe} × "
-                f"~{code_rows // n_cells:,} code rows/cell"
-                f"{' ÷ m' if impl == 'wide' else ''}) > "
+                f"~{code_rows // n_cells:,} code rows/cell ÷ m) > "
                 f"max_candidate_rows={max_candidate_rows:,} — "
                 f"chunking cannot reduce this; lower nprobe or raise "
                 f"max_candidate_rows explicitly."
@@ -1602,85 +1588,70 @@ def ivfpq_index_topk(
             .select("vid", "j", "code", "cell")
         )
 
-    if impl == "wide":
-        # r11 probe shape (A/B'd at the 2 M decade — see SCALEBENCH):
-        # pivot each probed cell's code rows to ONE row per vector
-        # (vid, c0..c{m-1}) BEFORE the candidate join, so the join
-        # materializes n_queries × probed-vectors rows instead of m×
-        # that, the per-row ADC sum runs in codegen over a fixed j
-        # order, and the 1e9-row groupBy re-aggregation disappears.
-        # DPP does not reach a scan under an Aggregate (measured), so
-        # the file skip is STATIC: the probed cell set is bounded by
-        # n_cells (the same boundedness as the centroid broadcast) —
-        # collect it and push `cell IN (...)` into the scan's
-        # PartitionFilters (plan-pinned; stronger than DPP, no
-        # subquery wait).
-        cells_list = [
-            r[0] for r in probes.select("cell").distinct().collect()
+    # r11 probe shape (A/B'd at the 2 M decade — see SCALEBENCH):
+    # pivot each probed cell's code rows to ONE row per vector
+    # (vid, c0..c{m-1}) BEFORE the candidate join, so the join
+    # materializes n_queries × probed-vectors rows instead of m×
+    # that, the per-row ADC sum runs in codegen over a fixed j
+    # order, and the 1e9-row groupBy re-aggregation disappears.
+    # DPP does not reach a scan under an Aggregate (measured), so
+    # the file skip is STATIC: the probed cell set is bounded by
+    # n_cells (the same boundedness as the centroid broadcast) —
+    # collect it and push `cell IN (...)` into the scan's
+    # PartitionFilters (plan-pinned; stronger than DPP, no
+    # subquery wait).
+    cells_list = [
+        r[0] for r in probes.select("cell").distinct().collect()
+    ]
+    lut_j = lut.groupBy("query_id", "j").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("code", "qdot"))),
+            lambda e: e["qdot"],
+        ).alias("arr")
+    )
+    lutw = lut_j.groupBy("query_id").agg(
+        *[
+            F.first(
+                F.when(F.col("j") == j, F.col("arr")),
+                ignorenulls=True,
+            ).alias(f"a{j}")
+            for j in range(m)
         ]
-        lut_j = lut.groupBy("query_id", "j").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("code", "qdot"))),
-                lambda e: e["qdot"],
-            ).alias("arr")
-        )
-        lutw = lut_j.groupBy("query_id").agg(
+    )
+
+    def _scored(codes_df: DataFrame) -> DataFrame:
+        pruned = codes_df.withColumn(
+            "cell", F.col("cell").cast("long")
+        ).filter(F.col("cell").isin(cells_list))
+        wide = pruned.groupBy("vid", "cell").agg(
             *[
-                F.first(
-                    F.when(F.col("j") == j, F.col("arr")),
-                    ignorenulls=True,
-                ).alias(f"a{j}")
+                F.max(
+                    F.when(F.col("j") == j, F.col("code"))
+                ).alias(f"c{j}")
                 for j in range(m)
             ]
         )
-
-        def _scored(codes_df: DataFrame) -> DataFrame:
-            pruned = codes_df.withColumn(
-                "cell", F.col("cell").cast("long")
-            ).filter(F.col("cell").isin(cells_list))
-            wide = pruned.groupBy("vid", "cell").agg(
-                *[
-                    F.max(
-                        F.when(F.col("j") == j, F.col("code"))
-                    ).alias(f"c{j}")
-                    for j in range(m)
-                ]
+        adc = None
+        for j in range(m):
+            term = F.element_at(
+                F.col(f"a{j}"), F.col(f"c{j}").cast("int") + 1
             )
-            adc = None
-            for j in range(m):
-                term = F.element_at(
-                    F.col(f"a{j}"), F.col(f"c{j}").cast("int") + 1
-                )
-                adc = term if adc is None else adc + term
-            return (
-                wide.join(probes, "cell")
-                .filter(F.col("vid") != F.col("query_id"))
-                .join(lutw, "query_id")
-                .select(
-                    "query_id",
-                    F.col("vid").alias("neighbor_id"),
-                    adc.alias("approx_dot"),
-                )
-            )
-
-        scored = _scored(codes)
-        if inc_df is not None:
-            scored = scored.unionByName(_scored(inc_df))
-        return _ivfpq_rank_scored(scored, k)
-
-    def _cand(codes_df: DataFrame) -> DataFrame:
+            adc = term if adc is None else adc + term
         return (
-            codes_df.withColumn("cell", F.col("cell").cast("long"))
-            .join(probes, "cell")
+            wide.join(probes, "cell")
             .filter(F.col("vid") != F.col("query_id"))
-            .join(lut, ["query_id", "j", "code"])
-            .select("query_id", F.col("vid").alias("neighbor_id"), "qdot")
+            .join(lutw, "query_id")
+            .select(
+                "query_id",
+                F.col("vid").alias("neighbor_id"),
+                adc.alias("approx_dot"),
+            )
         )
 
-    cand = _cand(codes)
+    scored = _scored(codes)
     if inc_df is not None:
-        cand = cand.unionByName(_cand(inc_df))
-    return _ivfpq_rank(cand, k)
+        scored = scored.unionByName(_scored(inc_df))
+    return _ivfpq_rank_scored(scored, k)
 
 
 def ivfpq_index_topk_chunked(
@@ -1693,7 +1664,6 @@ def ivfpq_index_topk_chunked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_candidate_rows: int = MAX_PROBE_CANDIDATES,
-    impl: str = "wide",
 ) -> DataFrame:
     """The derived-geometry alternative the
     :func:`ivfpq_index_topk` guard points at: when the query set is
@@ -1713,9 +1683,7 @@ def ivfpq_index_topk_chunked(
         .agg(F.countDistinct("cb_j"))
         .collect()[0][0]
     )
-    per_query = max(
-        1, nprobe * code_rows // n_cells // (m if impl == "wide" else 1)
-    )
+    per_query = max(1, nprobe * code_rows // n_cells // m)
     if per_query > max_candidate_rows:
         raise ValueError(
             f"a SINGLE query materializes ~{per_query:,} candidate "
@@ -1731,7 +1699,7 @@ def ivfpq_index_topk_chunked(
         )
         out = ivfpq_index_topk(
             spark, path, chunk, nprobe=nprobe, k=k, id_col=id_col,
-            vec_col=vec_col, max_candidate_rows=None, impl=impl,
+            vec_col=vec_col, max_candidate_rows=None,
         )
         out.write.mode("append" if i else "overwrite").parquet(out_path)
     return spark.read.parquet(out_path)

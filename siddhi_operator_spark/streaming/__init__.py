@@ -15,7 +15,8 @@ reference's at-least-once NATS redelivery.
 from __future__ import annotations  # noqa: E402
 
 import math  # noqa: E402
-import os  # noqa: E402
+
+STATE_ROWS_PER_STORE = 65536
 
 
 def derived_state_partitions(spark, est_state_rows: int) -> int:
@@ -35,12 +36,11 @@ def derived_state_partitions(spark, est_state_rows: int) -> int:
     bands / state buckets / join epochs — parameterised, never a
     local-core constant):
 
-        partitions = clamp(ceil(state_rows / rows_per_store), 1, ceiling)
+        partitions = clamp(ceil(state_rows / STATE_ROWS_PER_STORE), 1, ceiling)
 
-    - ``rows_per_store`` (`SPARK_GRAFT_STATE_ROWS_PER_STORE`, default
-      65536): below ~64k rows a store's fixed open/commit overhead
-      dominates its data work, so splitting smaller state across more
-      stores only multiplies overhead; at ~100 B/row it also keeps a
+    - ``STATE_ROWS_PER_STORE`` (65536): below ~64k rows a store's fixed
+      open/commit overhead dominates its data work, so splitting smaller
+      state across more stores only multiplies overhead; at ~100 B/row it also keeps a
       store's working set ~6 MB — memtable-resident.
     - ``ceiling``: the session's AQE `initialPartitionNum` (32 ×
       cores locally, the cluster-submit value in production) — the
@@ -53,16 +53,13 @@ def derived_state_partitions(spark, est_state_rows: int) -> int:
     toward MORE partitions). Local effect: small-state rows collapse
     from 32 stores/operator to 1-2; fingerprints unchanged (state
     partitioning never affects results, pinned by the interleaved A/B
-    in tools/r16_state_partitions_ab.py).
+    in OPTIMIZATION_r16.md §3 "Derived streaming state partitions").
     """
-    rows_per_store = int(os.environ.get("SPARK_GRAFT_STATE_ROWS_PER_STORE", 65536))
-    if rows_per_store <= 0:  # escape hatch: disable the derivation
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         ceiling = int(
             spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
         )
     except Exception:  # noqa: BLE001 — vanilla session without the knob
         ceiling = spark.sparkContext.defaultParallelism * 32
-    n = math.ceil(max(1, est_state_rows) / rows_per_store)
+    n = math.ceil(max(1, est_state_rows) / STATE_ROWS_PER_STORE)
     return max(1, min(n, ceiling))

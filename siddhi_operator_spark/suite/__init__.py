@@ -125,7 +125,7 @@ from . import sources_suite  # noqa: E402,F401
 # share the same derivation + _materialize seam, were oracle-checked
 # locally this round (tools/check_oracle.py streaming_join — all
 # green) and are pinned by the fingerprint-identical fresh-process
-# A/B (tools/r16_state_partitions_ab.py) + the conf-restore test.
+# A/B (OPTIMIZATION_r16.md §3) + the conf-restore test.
 # After this window: r9/r10-stale = 0, max staleness = 7 (retired
 # here), r11-stale backlog = 39 remains for r17.
 # ---------------------------------------------------------------------------
@@ -195,64 +195,6 @@ _FRONT_NAMES = (
 # the NEWEST-checked tail entries, never the stale/never-checked
 # groups.
 
-# (Archive) Round-15 rotation as executed — retired by the r16 window
-# above:
-_R15_FRONT_NAMES_ARCHIVE = (
-    # (2) the forty r9-stale rows (oldest ledger tail)
-    "window_sliding_time",
-    "window_sort_topk",
-    "window_frequent",
-    "window_unique_last",
-    "window_timelength",
-    "window_delay",
-    "window_lossy_frequent",
-    "window_expression_batch",
-    "window_unique_first",
-    "window_extrema_by_time",
-    "window_expression",
-    "window_cron",
-    "window_unique_timebatch",
-    "window_unique_dedup",
-    "window_extrema_by_length",
-    "window_expired_events",
-    "join_stream_table",
-    "join_outer_stream_table",
-    "join_theta_residual",
-    "join_stream_aggregation",
-    "join_asof",
-    "join_range_interval",
-    "agg_ts_regress_forecast",
-    "ratelimit_first",
-    "ratelimit_last",
-    "ratelimit_snapshot",
-    "incr_agg_day_retrieval",
-    "multimodal_features",
-    "streaming_timebatch",
-    "streaming_cep_followed_by",
-    "streaming_length_window",
-    "streaming_session_window",
-    "streaming_cep_absence",
-    "streaming_cep_count_quantifier",
-    "streaming_cep_logical_and",
-    # (3) new in r15 — never checked
-    "siddhiql_plan_stats_pinned",
-    "pattern_scan_null_keys",
-    "text_bpe_train",
-    "text_bpe_encode",
-    "text_word_lm",
-    "text_dsir_weight",
-    "streaming_text_dsir",
-    "corpus_shard_manifest",
-    "dedup_token_set",
-    "streaming_shard_assign",
-    # (4) executed code changed in r15
-    "siddhiql_join_windowed_auto",
-    "siddhiql_streaming_join_bucket",
-    "window_session",
-    "siddhiql_session_window",
-    "dedup_minhash_lsh",
-)
-
 # (Archive) Round-14 rotation as executed: (1) no r13 reds; (2) the
 # thirty-two r8-stale rows (tpch tail, similarity/MIPS tail,
 # curation/decontaminate rows, streaming text twins, collections and
@@ -261,8 +203,6 @@ _R15_FRONT_NAMES_ARCHIVE = (
 # scan tiers, streaming join passthrough, QL @plan routing); (5) 1
 # r9-stale filler (window_externaltimebatch).  Left r9-stale = 40,
 # max staleness 5 — retired by the r15 window above.
-
-_R3_MODULES: tuple[str, ...] = ()
 
 # Round-16 rotation, pre-staged: lead with any r15 reds, then the
 # FIVE r9-stale rows the late-r15 additions displaced
@@ -378,13 +318,10 @@ def _rotate_for_driver_window() -> None:
         raise RuntimeError(f"front names not in REGISTRY: {unknown}")
 
     def rank(item):
-        name, spec = item
+        name = item[0]
         if name in _FRONT_NAMES:
-            return (0, _FRONT_NAMES.index(name), 0)
-        mod = spec.fn.__module__.rsplit(".", 1)[-1]
-        if mod in _R3_MODULES:
-            return (1, _R3_MODULES.index(mod), 0)
-        return (2, 0, 0)
+            return _FRONT_NAMES.index(name)
+        return len(_FRONT_NAMES)
 
     ordered = sorted(REGISTRY.items(), key=rank)  # stable: keeps in-module order
     REGISTRY.clear()

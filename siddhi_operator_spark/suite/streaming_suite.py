@@ -43,7 +43,8 @@ def _materialize(
     # (streaming.derived_state_partitions) so a small-state query does
     # not open+commit 32 RocksDB stores per operator per micro-batch.
     # shuffle.partitions is read at the query's FIRST batch and pinned
-    # by its checkpoint; restored right after start so nothing else in
+    # by its checkpoint; restored in the `finally` once
+    # processAllAvailable() has drained the query, so nothing else in
     # the session is affected.
     prev = spark.conf.get("spark.sql.shuffle.partitions") if state_partitions else None
     if state_partitions:

@@ -876,9 +876,10 @@ def test_remove_repeated_spans_bloom_prefilter_equivalent(spark):
 
 
 def test_remove_repeated_spans_prefilter_validation(spark):
-    """Unknown prefilter strings and prefilter-with-fused are rejected
-    at entry (r9 ADVICE: 'auto'+fused used to silently degrade to
-    'none' and leak the previous call's persisted tail)."""
+    """Unknown prefilter strings are rejected at entry, and a
+    default-shape call releases the previous call's persisted tail
+    (r9 ADVICE: a call that skipped the release leaked it across the
+    session)."""
     import pytest
 
     from siddhi_operator_spark.pipeline import curation as C
@@ -888,9 +889,8 @@ def test_remove_repeated_spans_prefilter_validation(spark):
     )
     with pytest.raises(ValueError, match="prefilter"):
         C.remove_repeated_spans(df, prefilter="blomm")
-    with pytest.raises(ValueError, match="fused"):
-        C.remove_repeated_spans(df, impl="fused", prefilter="auto")
-    # a fused call releases any previously persisted tail
+    # a default-shape (prefilter="none") call releases any previously
+    # persisted tail
     C.remove_repeated_spans(
         spark.createDataFrame(
             [(1, "x y z w x y z w"), (2, "x y z w q r s t")],
@@ -899,7 +899,7 @@ def test_remove_repeated_spans_prefilter_validation(spark):
         prefilter="bloom",
     ).collect()
     assert len(C._SPAN_TAIL_CACHE) == 1
-    C.remove_repeated_spans(df, impl="fused").collect()
+    C.remove_repeated_spans(df).collect()
     assert not C._SPAN_TAIL_CACHE
 
 
@@ -1023,14 +1023,13 @@ def test_remove_repeated_spans_property(spark):
                 body = f"{body} {boiler} {body}".strip()
             docs.append((did, body))
         df = spark.createDataFrame(docs, "doc_id long, text string")
-        for impl in ("fused", "probe"):  # both tiers, same semantics
-            got = {
-                r.doc_id: (r.n_tokens, r.n_removed, r.text_clean)
-                for r in C.remove_repeated_spans(
-                    df, k=k, w=w, min_docs=min_docs, impl=impl
-                ).collect()
-            }
-            assert got == ref(docs), f"trial {trial} impl {impl}"
+        got = {
+            r.doc_id: (r.n_tokens, r.n_removed, r.text_clean)
+            for r in C.remove_repeated_spans(
+                df, k=k, w=w, min_docs=min_docs
+            ).collect()
+        }
+        assert got == ref(docs), f"trial {trial}"
 
 
 def test_dedup_lines_property(spark):
@@ -1733,12 +1732,13 @@ def test_ivfpq_compact_crash_recovery(spark, tmp_path, monkeypatch):
     )  # nothing displaced-then-dropped
 
 
-def test_ivfpq_wide_probe_equals_long(spark, tmp_path):
-    """The r11 wide probe (pivot codes to one row per vector, static
-    cell-list pruning, per-row codegen ADC sum) must be bit-identical
-    to the long path — same addends in a fixed j order under the
-    epsilon-bias rounding — including over committed exactly-once inc
-    batches."""
+def test_ivfpq_probe_over_inc_batches_equals_rebuild(spark, tmp_path):
+    """The r11 probe (pivot codes to one row per vector, static
+    cell-list pruning, per-row codegen ADC sum) over committed
+    exactly-once inc batches must be bit-identical to the same probe
+    over a full rebuild of the union corpus — the equivalence the
+    `similarity_ivfpq_append` oracle row asserts, here with the
+    appended rows served from `codes_inc` instead of the cells."""
     from siddhi_operator_spark.catalog import load
     from siddhi_operator_spark.pipeline import similarity as S
     from siddhi_operator_spark.streaming.similarity import (
@@ -1748,28 +1748,23 @@ def test_ivfpq_wide_probe_equals_long(spark, tmp_path):
 
     emb = load(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / "idx")
-    S.ivfpq_index_write(
-        emb.filter(F.col("vec_id") < 300), idx,
-        n_cells=8, dims=64, m=8, n_codes=16,
-    )
+    full = str(tmp_path / "full")
+    geo = dict(n_cells=8, dims=64, m=8, n_codes=16)
+    S.ivfpq_index_write(emb.filter(F.col("vec_id") < 300), idx, **geo)
     _stage_batch(
         emb.filter(F.col("vec_id") >= 300), idx, 0, "vec_id", "embedding"
     )
     assert _commit_batch(spark, idx, 0)
+    assert S.ivfpq_inc_batches(spark, idx)  # the inc branch is probed
+    S.ivfpq_index_write(emb, full, **geo)
     q = emb.filter(F.col("vec_id") < 6)
-    long_rows = sorted(
-        map(
-            tuple,
-            S.ivfpq_index_topk(spark, idx, q, 2, 3, impl="long").collect(),
-        )
+    inc_rows = sorted(
+        map(tuple, S.ivfpq_index_topk(spark, idx, q, 2, 3).collect())
     )
-    wide_rows = sorted(
-        map(
-            tuple,
-            S.ivfpq_index_topk(spark, idx, q, 2, 3, impl="wide").collect(),
-        )
+    full_rows = sorted(
+        map(tuple, S.ivfpq_index_topk(spark, full, q, 2, 3).collect())
     )
-    assert long_rows == wide_rows and long_rows
+    assert inc_rows == full_rows and inc_rows
 
 
 def test_ivfpq_rebuild_discards_stale_state(spark, tmp_path, monkeypatch):
@@ -2159,7 +2154,7 @@ def test_document_pipeline_input_parallelism(spark):
     plan: the helper's round-robin repartition appears exactly when
     the input is narrower than the cluster. Result identity per
     operator is pinned by the DuckDB oracle rows + the r15 A/B
-    (`tools/r15_docpar_ab.py`, sorted collects equal on all arms)."""
+    (OPTIMIZATION_r15.md §3, sorted collects equal on all arms)."""
     from siddhi_operator_spark.pipeline import text as X
 
     target = spark.sparkContext.defaultParallelism

@@ -1459,7 +1459,7 @@ def test_derived_state_partitions(spark):
     state-size estimate — small state collapses to few stores (the
     per-store open/commit overhead floor), huge state saturates at the
     session's initialPartitionNum ceiling (production unchanged at
-    corpus scale), and rows_per_store=0 disables the derivation.
+    corpus scale).
     Measured on the five stream-stream join rows (fresh-process
     alternated A/B, fingerprints identical): 1.5-2.9x, state commit
     time 143-331k ms -> ~1k ms."""
@@ -1471,15 +1471,6 @@ def test_derived_state_partitions(spark):
     assert derived_state_partitions(spark, 1000) == 1
     assert derived_state_partitions(spark, 65537) == 2
     assert derived_state_partitions(spark, 10**12) == ceiling
-    import os
-
-    os.environ["SPARK_GRAFT_STATE_ROWS_PER_STORE"] = "0"
-    try:
-        assert derived_state_partitions(spark, 1000) == int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_STATE_ROWS_PER_STORE"]
 
     # _materialize must restore the session conf after the query drains
     from siddhi_operator_spark.suite import streaming_suite as SS

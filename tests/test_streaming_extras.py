@@ -756,9 +756,8 @@ def test_state_store_session_defaults(spark):
     RocksDB provider (state ≫ heap at scale) WITH changelog
     checkpointing — commit cost O(batch delta), not O(state size); a
     full-snapshot-per-commit default is the scale-killer at 100 TB
-    state. Parameterised via SPARK_GRAFT_ROCKSDB_CHANGELOG; measured
-    output-identical and wall-neutral at fixture scale, so the
-    production default is also the local default."""
+    state. Measured output-identical and wall-neutral at fixture scale,
+    so the production default is also the local default."""
     assert spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass"
     ).endswith("RocksDBStateStoreProvider")

@@ -129,3 +129,51 @@ def test_bench_queries_resolve():
     for name in bench.BENCH_QUERIES:
         assert name in REGISTRY, name
         assert REGISTRY[name].oracle, name
+
+
+def test_engine_env_reads_are_deployment_settings_only():
+    """Knob-creep guard: the engine reads only deployment settings from
+    the environment. A Spark conf override goes through
+    ``build_session(extra_conf=...)``, never a second env-var path. A
+    non-literal key is refused too, since it would hide from this
+    scan."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "siddhi_operator_spark"
+
+    def is_environ(node):
+        return (
+            isinstance(node, ast.Attribute) and node.attr == "environ"
+        ) or (isinstance(node, ast.Name) and node.id == "environ")
+
+    keys, dynamic = set(), []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            key = None
+            if isinstance(node, ast.Call) and node.args:
+                f = node.func
+                if (
+                    isinstance(f, ast.Attribute) and is_environ(f.value)
+                ) or (
+                    isinstance(f, ast.Attribute) and f.attr == "getenv"
+                ) or (isinstance(f, ast.Name) and f.id == "getenv"):
+                    key = node.args[0]
+            elif isinstance(node, ast.Subscript) and is_environ(node.value):
+                key = node.slice
+            elif isinstance(node, ast.Compare) and any(
+                is_environ(c) for c in node.comparators
+            ):
+                key = node.left
+            if key is None:
+                continue
+            if isinstance(key, ast.Constant) and isinstance(key.value, str):
+                keys.add(key.value)
+            else:
+                dynamic.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not dynamic, f"non-literal env keys: {dynamic}"
+    assert keys == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_SF_DIR",
+    }, sorted(keys)
