@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .patterns import _plan_token
+
 
 def stream_table_join(
     stream: DataFrame,
@@ -68,17 +70,6 @@ STATS_JOBS_RUN = 0  # incremented per executed stats job (test hook)
 
 def clear_decision_cache() -> None:
     _DECISION_CACHE.clear()
-
-
-def _plan_token(df: DataFrame) -> int | None:
-    # `_jdf` is a private JVM handle absent under Spark Connect — there
-    # every `auto` call silently degrades to re-running the (correct)
-    # stats job per construction; see the twin in operators/patterns.py
-    # for the Connect-safe fallback-token sketch.
-    try:
-        return df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        return None
 
 
 def derive_join_bucket(

@@ -18,6 +18,7 @@ condition so state/probe ranges stay small and AQE can split skew.
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -123,6 +124,7 @@ def _nearest_probe_scan(
 _RULE_VERSION = 2  # v2: null-key rows excluded from the stats scan
 _DECISION_CACHE: dict[tuple, str] = {}
 STATS_JOBS_RUN = 0  # incremented per executed stats job (test hook)
+_PLAN_TOKEN_WARNED = False
 
 
 def clear_decision_cache() -> None:
@@ -135,15 +137,26 @@ def _plan_token(df: DataFrame) -> int | None:
     than risk a wrong cache hit).
 
     `_jdf` is a private JVM handle that does NOT exist under Spark
-    Connect — there every `auto` call silently degrades to re-running
+    Connect — there every `auto` call degrades to re-running
     the (correct) stats job per construction.  If Connect ever matters
     here, a Connect-safe fallback token is a hash of the plan text
     (`df._explain_string()` / explain output); keyed with
     `_RULE_VERSION` it can only trade a cache miss for a cache hit on
-    an identical plan string — never a wrong pick."""
+    an identical plan string — never a wrong pick.  The first failure
+    per process warns (`RuntimeWarning`), naming the lost memoization."""
+    global _PLAN_TOKEN_WARNED
     try:
         return df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
+    except Exception as e:  # noqa: BLE001
+        if not _PLAN_TOKEN_WARNED:
+            _PLAN_TOKEN_WARNED = True
+            warnings.warn(
+                "auto-tier decision memoization is off: the plan-identity "
+                f"probe (DataFrame._jdf) failed ({e!r}), so every 'auto' "
+                "pick re-runs its stats job",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         return None
 
 

@@ -10,6 +10,7 @@ engines (the DuckDB oracles run the byte-identical computation).
 
 from __future__ import annotations
 
+import warnings
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -203,6 +204,8 @@ def band_table(
     ).select(F.col(id_col), F.col("bb.band"), F.col("bb.band_hash"), *carried)
 
 
+_EST_SIZE_WARNED = False
+
 
 def _est_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's own size estimate for a frame (bytes) — the SAME
@@ -213,17 +216,28 @@ def _est_size_bytes(df: DataFrame) -> int | None:
 
     Known Connect degradation (r15 verdict): because the fallback is
     the scale-safe INLINE scoring regime, under Spark Connect every
-    corpus — including broadcast-sized ones — silently takes the
+    corpus — including broadcast-sized ones — takes the
     regime that is slower at small scale (correct results either way;
     the failure direction is wall time, never memory). A Connect
     deployment that cares can pin ``inline=False`` explicitly for
     known-small corpora, or port this probe to a count()-based one
     (one extra job per call — rejected here because the classic-mode
     zero-job contract is what lets the suite build plans without
-    launching work)."""
+    launching work).  The first failure per process warns
+    (`RuntimeWarning`), naming the lost broadcast-regime pick."""
+    global _EST_SIZE_WARNED
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001
+    except Exception as e:  # noqa: BLE001
+        if not _EST_SIZE_WARNED:
+            _EST_SIZE_WARNED = True
+            warnings.warn(
+                "LSH broadcast-regime pick is off: the size-estimate probe "
+                f"(DataFrame._jdf) failed ({e!r}), so every corpus takes "
+                "the inline scoring regime",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         return None
 
 
@@ -275,6 +289,16 @@ def lsh_candidate_pairs(
     banded rows ride the signature payload through the explode and
     scoring happens inside the bucket self-join, the only shape whose
     cost stays linear at corpus scale.
+
+    Codegen width of the inline scorer: ``n_sig_match`` is one flat sum
+    of ``n_hashes`` chunk compares in a single generated method, about
+    210 bytes of bytecode per hash (Spark 4.1: 5.7 KB at 32 hashes,
+    26 KB at 128, 54 KB at 256).  It stays in whole-stage codegen while
+    that method is under ``spark.sql.codegen.hugeMethodLimit`` (64 KB by
+    default, reached near 300 hashes; pinned at 128 by a test).  Past
+    about 40 hashes it is also over HotSpot's 8000-byte limit for JIT
+    compilation (``-XX:+DontCompileHugeMethods``, the default), so only
+    the default 32 hashes keep the scorer JIT-compiled.
 
     Pair dedup (r15): a pair that collides in k bands comes out of the
     band self-join k times (1.64× duplication measured at sf0.1). The

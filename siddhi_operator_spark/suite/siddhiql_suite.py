@@ -1430,7 +1430,7 @@ def siddhiql_playback(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "siddhiql_plan_stats_pinned",
+    "siddhiql_pattern_scan",
     oracle="""
     SELECT signup_id, purchase_id
     FROM (
@@ -1443,21 +1443,18 @@ def siddhiql_playback(spark: SparkSession, sf: str) -> DataFrame:
        AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 1 HOUR
     ) WHERE rn = 1
     """,
-    tags=("siddhiql", "pattern", "plan-stats"),
+    tags=("siddhiql", "pattern", "scan"),
 )
-def siddhiql_plan_stats_pinned(spark: SparkSession, sf: str) -> DataFrame:
-    """r15 (r14 verdict #3): `plan_stats` pins the derived regime pick
-    from stats computed OFFLINE — this row submits the canonical
-    followed-by with hot-key stats (`max_pairs` far above the anchored
-    threshold) so the SCAN tier plans with ZERO stats jobs at submit
-    time (`tests/test_siddhiql.py::test_ql_plan_stats_pins_picks_zero_
-    jobs` pins the job count; this row pins the tier's OUTPUT against
-    the join-tier relational oracle — the row-identical contract the
-    tiers must keep under every routing door)."""
+def siddhiql_pattern_scan(spark: SparkSession, sf: str) -> DataFrame:
+    """The canonical followed-by pinned to the SCAN tier with
+    `@plan(impl='scan')` — the form a pick resolved offline with
+    `choose_pattern_impl(stats=…)` takes in an app.  The row pins the
+    QL scan tier's OUTPUT against the join-tier relational oracle: the
+    tiers must stay row-identical under every routing door."""
     app = (
         _EVENTS_DEF
         + """
-    @info(name='conv')
+    @plan(impl='scan')
     from every e1=events[event_type == 'signup']
          -> e2=events[event_type == 'purchase']
          within 1 hour
@@ -1466,10 +1463,7 @@ def siddhiql_plan_stats_pinned(spark: SparkSession, sf: str) -> DataFrame:
     """
     )
     return run_app(
-        app,
-        {"events": load(spark, sf, "events")},
-        pattern_key="user_id",
-        plan_stats={"conv": (10_000_000, 1_000)},
+        app, {"events": load(spark, sf, "events")}, pattern_key="user_id"
     )["Conversions"]
 
 

@@ -936,3 +936,31 @@ def test_session_prefix_tier_matches_agg_tier(spark):
             df, "ts", "10 minutes", keys=["user_id"],
             aggs=[("min", "value", "mn")],
         )
+
+
+def test_jdf_probe_failures_warn_once(monkeypatch):
+    """Private-API probes degrade safely AND say so: on a frame whose
+    `_jdf` raises (as under Spark Connect) the plan-token and
+    size-estimate probes return None, and each warns once per process
+    naming the behaviour that is lost."""
+    import warnings
+
+    from siddhi_operator_spark.pipeline import dedup as D
+
+    class NoJvmFrame:
+        @property
+        def _jdf(self):
+            raise AttributeError("no JVM handle")
+
+    monkeypatch.setattr(P, "_PLAN_TOKEN_WARNED", False)
+    monkeypatch.setattr(D, "_EST_SIZE_WARNED", False)
+    for probe, lost in (
+        (P._plan_token, "memoization"),
+        (D._est_size_bytes, "broadcast-regime pick"),
+    ):
+        with warnings.catch_warnings(record=True) as rec:
+            warnings.simplefilter("always")
+            assert probe(NoJvmFrame()) is None
+            assert probe(NoJvmFrame()) is None
+        assert [w.category for w in rec] == [RuntimeWarning]
+        assert lost in str(rec[0].message)

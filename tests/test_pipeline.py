@@ -2281,3 +2281,38 @@ def test_min_match_filter_stays_above_scoring_projection(spark):
                 and "zip_with" not in lines[j]
                 and "= sig_" not in lines[j]
             ), f"inline={inline}: scoring re-evaluated inside join condition"
+
+
+def test_inline_scorer_stays_in_codegen_at_128_hashes(spark):
+    """The inline regime's `n_sig_match` scorer is one flat sum of
+    n_hashes chunk compares in one generated method. Spark drops a
+    whole-stage codegen subtree back to interpreted rows once that
+    method passes `spark.sql.codegen.hugeMethodLimit`, so pin that a
+    128-hash scorer still compiles inside its codegen stage (the bound
+    is documented on `lsh_candidate_pairs`)."""
+    import re
+
+    rows = [
+        (i, " ".join(f"w{(i // 2) * 7 + j}" for j in range(6)))
+        for i in range(40)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = D.minhash_signature(docs, n_hashes=128)
+    pairs = D.lsh_candidate_pairs(
+        sigs, n_hashes=128, max_bucket=None, inline=True, cache=False
+    )
+    assert len(pairs.collect()) == 20  # the planted duplicate pairs
+    # explained after the action, so the adaptive plan is final
+    codegen = pairs._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "codegen"
+        )
+    )
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    sizes = [
+        int(re.search(r"maxMethodCodeSize:(\d+)", sub).group(1))
+        for sub in codegen.split("== Subtree")[1:]
+        if "n_sig_match" in sub.split("Generated code")[0]
+    ]
+    assert sizes, "n_sig_match projection left whole-stage codegen"
+    assert max(sizes) <= limit, (max(sizes), limit)

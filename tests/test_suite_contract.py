@@ -9,9 +9,13 @@ Spark — they gate the whole suite in seconds:
 - every oracle must at least DESCRIBE cleanly against the sf0.001
   views (syntax + column resolution), so a typo'd oracle fails here
   instead of at driver time.
+- the registry order (the driver checks only its first 50 rows) is
+  the fold of the CORRECTNESS ledger: reds, never-checked, oldest.
 """
 
 from __future__ import annotations
+
+import json
 
 import duckdb
 import pytest
@@ -177,3 +181,57 @@ def test_engine_env_reads_are_deployment_settings_only():
         "SPARK_GRAFT_DRIVER_MEM",
         "SPARK_GRAFT_SF_DIR",
     }, sorted(keys)
+
+
+_OK = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+
+
+def _ledger(tmp_path, rnd, records):
+    (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(json.dumps(records))
+
+
+def test_driver_window_order_rules(tmp_path):
+    """Reds first, then never-checked, then oldest last-checked round;
+    ties keep registration order; files fold in NUMERIC round order
+    (a lexical sort would apply r10 before r9, making b red and c
+    green below); no ledger files means registration order."""
+    from siddhi_operator_spark.suite import driver_window_order
+
+    names = ["a", "b", "c", "d", "e", "f"]
+    assert driver_window_order(names, tmp_path) == names
+    _ledger(tmp_path, 9, {
+        "a": _OK, "b": {**_OK, "rows_match": False}, "c": _OK, "e": _OK,
+    })
+    _ledger(tmp_path, 10, {
+        "b": _OK,
+        "c": {**_OK, "hash_match": False},
+        "f": {**_OK, "err": "boom"},
+        "retired": _OK,
+    })
+    assert driver_window_order(names, tmp_path) == ["c", "f", "d", "a", "e", "b"]
+
+
+def test_driver_window_follows_the_ledger():
+    """On the committed ledger, no green row inside the driver's first
+    50 was last checked more recently than any row outside them."""
+    from siddhi_operator_spark.suite import LEDGER_DIR
+
+    latest: dict[str, tuple[int, dict]] = {}
+    for path in LEDGER_DIR.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.split("_r")[1])
+        for name, rec in json.loads(path.read_text()).items():
+            if rnd > latest.get(name, (-1, None))[0]:
+                latest[name] = (rnd, rec)
+
+    def red(name):
+        rec = latest.get(name, (-1, {}))[1]
+        return rec.get("err") is not None or False in (
+            rec.get("rows_match"), rec.get("schema_match"), rec.get("hash_match")
+        )
+
+    def last_checked(name):
+        return latest.get(name, (-1, None))[0]
+
+    names = list(REGISTRY)
+    inside = [n for n in names[:50] if not red(n)]
+    assert max(map(last_checked, inside)) <= min(map(last_checked, names[50:]))
